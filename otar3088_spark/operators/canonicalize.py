@@ -21,8 +21,6 @@ Two kernels:
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -298,36 +296,14 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
     )
 
 
-# identity-keyed per-dictionary memo, same pattern and staleness contract as
-# tagging's _PREP_MEMO/_ANCHOR_MEMO: the dictionary is a broadcast dim by
-# contract, so the eager driver-side alias-clustering work below (a
-# localCheckpoint job + the small-graph union-find collect inside
-# connected_components) is legitimate plan-time work over the dim — but it
-# is IDENTICAL for the same dictionary DataFrame object and was re-run on
-# every pipeline build (measured 0.7 s of a 2.0 s warm build_kg, round 7).
-_CLUSTER_MEMO: OrderedDict[int, tuple[DataFrame, DataFrame]] = OrderedDict()
-_CLUSTER_MEMO_MAX = 8
-
-
 def entity_clusters(dictionary: DataFrame) -> DataFrame:
     """``(ent_id, cluster_id)`` for every dictionary entity; singletons map to
-    themselves. cluster_id = min ent_id of the connected component.
-
-    Memoized per dictionary DataFrame object (see _CLUSTER_MEMO above): a
-    re-read of changed dictionary data is a new object -> miss."""
-    hit = _CLUSTER_MEMO.get(id(dictionary))
-    if hit is not None and hit[0] is dictionary:
-        _CLUSTER_MEMO.move_to_end(id(dictionary))
-        return hit[1]
+    themselves. cluster_id = min ent_id of the connected component."""
     edges = alias_edges(dictionary)
     comps = connected_components(edges)
     all_ents = dictionary.select("ent_id").distinct()
-    out = all_ents.join(
+    return all_ents.join(
         comps.withColumnRenamed("node", "ent_id"), "ent_id", "left"
     ).select(
         "ent_id", F.coalesce(F.col("component"), F.col("ent_id")).alias("cluster_id")
     )
-    _CLUSTER_MEMO[id(dictionary)] = (dictionary, out)
-    while len(_CLUSTER_MEMO) > _CLUSTER_MEMO_MAX:
-        _CLUSTER_MEMO.popitem(last=False)
-    return out

@@ -30,8 +30,6 @@ output is pruned immediately by the broadcast hash join.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,32 +47,6 @@ from otar3088_spark.functions.text import (
 REDLIST_SUFFIX = r"(?:genesis|cytic|ial|yal)$"
 
 
-# --- per-dictionary plan/anchor memoization --------------------------------
-# Repeated calls with the SAME dictionary DataFrame object (bench repeats,
-# mentions_rollup / iob_roundtrip reusing the tagging subquery, resumed
-# pipelines) pay the dictionary-side plan construction and the plan-time
-# anchor-collect job once, not per invocation. Measured (round-5 repro,
-# tools/battery_repro.py): the anchor collect is 3.3-3.9s on first touch in
-# a battery-loaded JVM (cold whole-stage-codegen compile of a tiny job) and
-# ~0.5s every repeat after — all of it identical work on an identical dim.
-# Keys are (object identity, overrides, prefilter cap); the value pins the
-# key DataFrame so an id() can never be reused while its entry lives. A
-# re-read of changed source data is a NEW DataFrame object -> memo miss, so
-# staleness is impossible by construction — under the standard Spark
-# contract that the files UNDER a held DataFrame are immutable (mutating
-# them in place already invalidates broadcast reuse, cached plans and AQE
-# statistics engine-wide; refresh = re-read, which is a new object). The
-# one memo-specific consequence of breaking that contract: the collected
-# anchor IN-set would lag the lazily-re-scanned dim, silently dropping
-# mentions of terms appended in place. LRU-bounded: plans and <=50k
-# anchor strings per entry.
-_MEMO_MAX = 8
-_PREP_MEMO: OrderedDict[int, tuple[DataFrame, DataFrame]] = OrderedDict()
-_ANCHOR_MEMO: OrderedDict[
-    tuple, tuple[DataFrame, DataFrame, list[str] | None, bool]
-] = OrderedDict()
-
-
 def prepare_dictionary(dict_df: DataFrame) -> DataFrame:
     """Normalize the gazetteer for matching.
 
@@ -83,29 +55,17 @@ def prepare_dictionary(dict_df: DataFrame) -> DataFrame:
     (cellfinder_clean.ipynb cell 8, P7), lowercase matching keys
     (PhraseMatcher attr="LOWER"). Output columns:
     ``ent_id, label, term, term_tokens(array<string>), n(int), first(string)``.
-
-    Memoized per input DataFrame object (see _PREP_MEMO above) so repeated
-    pipeline builds over one dictionary share one prepared plan — which in
-    turn lets tag_mentions' anchor memo hit.
     """
-    hit = _PREP_MEMO.get(id(dict_df))
-    if hit is not None and hit[0] is dict_df:
-        _PREP_MEMO.move_to_end(id(dict_df))
-        return hit[1]
     d = dict_df.filter(F.length("term") > 2).filter(
         ~((F.col("label") == "Anatomy") & F.lower(F.col("term")).rlike(REDLIST_SUFFIX))
     )
     d = d.withColumn("term_tokens", F.split(F.lower(F.trim(F.col("term"))), r"\s+"))
-    prepared = (
+    return (
         d.withColumn("n", F.size("term_tokens").cast("int"))
         .withColumn("first_tok", F.element_at("term_tokens", 1))
         .dropDuplicates(["ent_id", "label", "term_tokens"])
         .select("ent_id", "label", "term", "term_tokens", "n", "first_tok")
     )
-    _PREP_MEMO[id(dict_df)] = (dict_df, prepared)
-    while len(_PREP_MEMO) > _MEMO_MAX:
-        _PREP_MEMO.popitem(last=False)
-    return prepared
 
 
 def tokenize_sentences(sentences: DataFrame) -> DataFrame:
@@ -236,7 +196,7 @@ def tag_mentions(
     groups) never repay.
 
     Default ``None`` = AUTO: the skew statistic is computed dim-side at
-    prepare time (one tiny memoized job over the broadcast dictionary) —
+    prepare time (one tiny job over the broadcast dictionary) —
     any first-position surface form anchoring more than
     ``bigram_anchor_threshold`` n>=2 terms is an oversized group, and ONLY
     those groups switch to pair keys (n==1 terms and small groups keep
@@ -251,30 +211,74 @@ def tag_mentions(
     CALLER CONTRACT: this function runs bounded **eager Spark jobs at plan
     time** (dim-side skew stats under AUTO, plus the anchor IN-set probe) —
     plan construction can block on, and fail from, a live Spark job. Both
-    jobs scan only the broadcast-scale dictionary and are memoized per
-    (dictionary, overrides, cap, anchor mode), so repeat calls are free.
+    jobs scan only the broadcast-scale dictionary and run once per call.
     """
-    ov = dict(lemma_overrides or {})
-
-    # memo hit: same dictionary object + same overrides + same cap + same
-    # anchor mode means the dim subplan AND the plan-time anchor IN-set are
-    # byte-identical — skip straight to the corpus-side plan (see
-    # _ANCHOR_MEMO note above)
-    mkey = (
-        id(dictionary),
-        tuple(sorted(ov.items())),
+    d0, firsts, pair_mode = _anchor_dim(
+        dictionary,
+        dict(lemma_overrides or {}),
         max_prefilter_terms,
         bigram_anchor,
         bigram_anchor_threshold,
     )
-    hit = _ANCHOR_MEMO.get(mkey)
-    if hit is not None and hit[0] is dictionary:
-        _ANCHOR_MEMO.move_to_end(mkey)
-        d0, firsts, pair_mode = hit[1], hit[2], hit[3]
-        return _tag_with_dim(
-            sentences, d0, firsts, precompute_offsets, pair_mode, _grouped_output
-        )
+    return _tag_with_dim(
+        sentences, d0, firsts, precompute_offsets, pair_mode, _grouped_output
+    )
 
+
+def tag_mentions_grouped(
+    sentences: DataFrame,
+    dictionary: DataFrame,
+    max_prefilter_terms: int = 50_000,
+    lemma_overrides: dict[str, str] | None = None,
+    bigram_anchor: bool | None = None,
+    bigram_anchor_threshold: int = 64,
+) -> DataFrame:
+    """``tag_mentions`` without the final explode: one row per MATCHED
+    sentence, ``(conv_id, turn_idx, sent_idx, sent_text, spans)`` where
+    ``spans`` is the per-sentence array of validated/deduped span structs
+    (exactly the array ``tag_mentions`` explodes into rows — same candidate
+    generation, validation, homonym dedup and longest-match containment).
+
+    Exists for consumers that immediately RE-GROUP the span rows per
+    sentence (spans_to_iob and the training-data path): feeding them the
+    grouped form removes an explode, a collect_list re-aggregation exchange
+    and the sentence re-join from their plans (measured 3.0 s of the 8.4 s
+    sf1.0 spans_to_iob chain, round 7). Coverage caveat: sentences with no
+    ANCHOR candidate do not appear at all, while anchored sentences whose
+    candidates all fail validation appear with ``spans = []`` (the exploded
+    form emits no rows for either) — so absence does NOT mean "unmatched",
+    and callers that need every sentence must keep ``tag_mentions`` + an
+    outer join.
+
+    Always runs the per-sentence array formulation (the grouped shape IS
+    that path's intermediate), so it shares ``tag_mentions``'s
+    ``precompute_offsets=True`` scaling profile and anchor dim.
+    Same eager plan-time jobs contract as ``tag_mentions``.
+    """
+    return tag_mentions(
+        sentences,
+        dictionary,
+        max_prefilter_terms=max_prefilter_terms,
+        lemma_overrides=lemma_overrides,
+        precompute_offsets=True,
+        bigram_anchor=bigram_anchor,
+        bigram_anchor_threshold=bigram_anchor_threshold,
+        _grouped_output=True,
+    )
+
+
+def _anchor_dim(
+    dictionary: DataFrame,
+    ov: dict[str, str],
+    max_prefilter_terms: int,
+    bigram_anchor: bool | None,
+    bigram_anchor_threshold: int,
+) -> tuple[DataFrame, list[str] | None, bool]:
+    """Dictionary side of tag_mentions: the exploded-anchor dim ``d0``, the
+    plan-time anchor IN-set ``firsts`` (None above ``max_prefilter_terms``)
+    and ``pair_mode`` (whether any dim row keys on a (first, second) pair,
+    so the corpus side must emit pair keys). Runs the AUTO skew job and the
+    IN-set probe eagerly."""
     # --- dictionary-side normalization + preimage enumeration ----------------
     # Every dictionary token is normalized with the FULL lemma function; rows
     # whose normalized token sequences collide within (ent_id, label) merge
@@ -310,11 +314,11 @@ def tag_mentions(
     )
 
     # --- anchor-mode resolution (auto skew detection) ------------------------
-    # AUTO: one tiny dim-side job (memoized with the dim) — count n>=2 terms
-    # per first-position allowed surface form; forms anchoring more than the
-    # threshold are "oversized groups" whose unigram amplification would be
-    # |corpus occurrences of the form| x |group size|. Only those forms
-    # switch to pair keys. The oversized set is a driver literal: it is
+    # AUTO: one tiny dim-side job — count n>=2 terms per first-position
+    # allowed surface form; forms anchoring more than the threshold are
+    # "oversized groups" whose unigram amplification would be |corpus
+    # occurrences of the form| x |group size|. Only those forms switch to
+    # pair keys. The oversized set is a driver literal: it is
     # bounded by |dictionary| / threshold, and the dictionary is a broadcast
     # dim by contract.
     if bigram_anchor is None:
@@ -377,54 +381,7 @@ def tag_mentions(
     if len(firsts) > max_prefilter_terms:
         firsts = None
 
-    _ANCHOR_MEMO[mkey] = (dictionary, d0, firsts, pair_mode)
-    while len(_ANCHOR_MEMO) > _MEMO_MAX:
-        _ANCHOR_MEMO.popitem(last=False)
-    return _tag_with_dim(
-        sentences, d0, firsts, precompute_offsets, pair_mode, _grouped_output
-    )
-
-
-def tag_mentions_grouped(
-    sentences: DataFrame,
-    dictionary: DataFrame,
-    max_prefilter_terms: int = 50_000,
-    lemma_overrides: dict[str, str] | None = None,
-    bigram_anchor: bool | None = None,
-    bigram_anchor_threshold: int = 64,
-) -> DataFrame:
-    """``tag_mentions`` without the final explode: one row per MATCHED
-    sentence, ``(conv_id, turn_idx, sent_idx, sent_text, spans)`` where
-    ``spans`` is the per-sentence array of validated/deduped span structs
-    (exactly the array ``tag_mentions`` explodes into rows — same candidate
-    generation, validation, homonym dedup and longest-match containment).
-
-    Exists for consumers that immediately RE-GROUP the span rows per
-    sentence (spans_to_iob and the training-data path): feeding them the
-    grouped form removes an explode, a collect_list re-aggregation exchange
-    and the sentence re-join from their plans (measured 3.0 s of the 8.4 s
-    sf1.0 spans_to_iob chain, round 7). Coverage caveat: sentences with no
-    ANCHOR candidate do not appear at all, while anchored sentences whose
-    candidates all fail validation appear with ``spans = []`` (the exploded
-    form emits no rows for either) — so absence does NOT mean "unmatched",
-    and callers that need every sentence must keep ``tag_mentions`` + an
-    outer join.
-
-    Always runs the per-sentence array formulation (the grouped shape IS
-    that path's intermediate), so it shares ``tag_mentions``'s
-    ``precompute_offsets=True`` scaling profile and memoized anchor dim.
-    Same eager plan-time jobs contract as ``tag_mentions``.
-    """
-    return tag_mentions(
-        sentences,
-        dictionary,
-        max_prefilter_terms=max_prefilter_terms,
-        lemma_overrides=lemma_overrides,
-        precompute_offsets=True,
-        bigram_anchor=bigram_anchor,
-        bigram_anchor_threshold=bigram_anchor_threshold,
-        _grouped_output=True,
-    )
+    return d0, firsts, pair_mode
 
 
 def _tag_with_dim(
@@ -436,8 +393,8 @@ def _tag_with_dim(
     grouped_output: bool = False,
 ) -> DataFrame:
     """Corpus side of tag_mentions: anchor detection, window validation and
-    containment dedup against an already-prepared (possibly memoized)
-    exploded-anchor dim ``d0`` + plan-time anchor IN-set ``firsts``."""
+    containment dedup against the exploded-anchor dim ``d0`` + plan-time
+    anchor IN-set ``firsts`` built by ``_anchor_dim``."""
     # --- stage 1: anchor detection (allocation-lean) ------------------------
     # The hot path is ALLOCATION-BANDWIDTH bound, not CPU bound: explode bare
     # tokens (ONE array per sentence), derive the single RAW anchor key as a

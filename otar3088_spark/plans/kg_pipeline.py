@@ -161,20 +161,22 @@ def build_kg(
         # hash is one tiny job (the dictionary is the broadcast dim).
         from otar3088_spark.io.checkpoint import SnapshotStore
 
-        store = SnapshotStore(staging_dir)
-        _spans_df = spans
-        stage = (
-            "spans-"
-            + _span_stage_fingerprint(dictionary, use_model, model_scorer, lemma_overrides)
-        )
-        spans = store.get_or_compute(
-            _spans_df.sparkSession, stage, lambda: _spans_df
-        )
-        if _sent_cache is not None:
-            # snapshot committed (or resumed) -> nothing downstream reads
-            # the sentence subtree again; free the cache so repeated
-            # builds in one session never serve stale-by-timing data
-            _sent_cache.unpersist()
+        try:
+            store = SnapshotStore(staging_dir)
+            _spans_df = spans
+            stage = (
+                "spans-"
+                + _span_stage_fingerprint(dictionary, use_model, model_scorer, lemma_overrides)
+            )
+            spans = store.get_or_compute(
+                _spans_df.sparkSession, stage, lambda: _spans_df
+            )
+        finally:
+            if _sent_cache is not None:
+                # snapshot committed, resumed or failed -> nothing reads the
+                # sentence subtree again; free the cache so a failed build
+                # does not leave it pinned in the session
+                _sent_cache.unpersist()
     elif persist_spans:
         spans = spans.persist()
     resolved = resolve_labels(spans)

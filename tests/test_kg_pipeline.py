@@ -234,6 +234,54 @@ def test_build_kg_staging_resumes_with_lineage(spark, transcripts_df, dictionary
     assert len(stages2) == 2 and stages[0] in stages2
 
 
+def test_build_kg_failed_snapshot_releases_sentence_cache(
+    spark, transcripts_df, dictionary_df, tmp_path
+):
+    """The model branch persists the sentence subtree for the span snapshot;
+    a snapshot that fails mid-write must still unpersist it, or every failed
+    build leaves one cached RDD pinned in the session. Compares RDD ids, not
+    counts: the context cleaner may drop earlier tests' unreferenced
+    localCheckpoint RDDs at any time."""
+    import pytest
+
+    def arity_breaking_scorer(texts):
+        return []  # one list per input row is required -> the write job fails
+
+    transcripts_df.count()  # materialize the fixture's own cache first
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(Exception, match="span lists"):
+        build_kg(
+            transcripts_df,
+            dictionary_df,
+            model_scorer=arity_breaking_scorer,
+            staging_dir=str(tmp_path / "stage"),
+        )
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
+def test_dictionary_operators_do_not_pin_inputs(spark, dictionary_pd):
+    """Operators hold no module-level state: once the caller drops its
+    references, the DataFrames it passed in are garbage."""
+    import gc
+    import weakref
+
+    from otar3088_spark.operators.canonicalize import entity_clusters
+
+    raw = spark.createDataFrame(dictionary_pd)
+    sents = spark.createDataFrame(
+        [("c0", 0, 0, "HeLa cells grown in a mouse model")],
+        ["conv_id", "turn_idx", "sent_idx", "sent_text"],
+    )
+    prepared = prepare_dictionary(raw)
+    tag_mentions(sents, prepared)
+    entity_clusters(prepared)
+    refs = [weakref.ref(df) for df in (raw, prepared, sents)]
+    del raw, prepared, sents
+    gc.collect()
+    assert [r() for r in refs] == [None, None, None]
+
+
 def test_irregular_plural_corpus_parity(spark, dictionary_df, dictionary_pd):
     """F8 depth: the default IRREGULAR_PLURALS table must link irregular
     plural mentions ('bacteria' -> dictionary 'bacterium', last-token
@@ -546,50 +594,6 @@ def test_write_iceberg_seam(spark):
     assert not iceberg_catalog_configured(spark)
 
 
-def test_tagging_dim_memoization_identity_semantics(spark):
-    """Round-5 perf fix: repeated tag_mentions calls with the SAME prepared
-    dictionary object reuse the dim subplan + plan-time anchor IN-set
-    (tagging._ANCHOR_MEMO) — and the memo can never serve stale data because
-    it keys on object identity: an equivalent-but-new DataFrame misses."""
-    from otar3088_spark.operators import tagging
-
-    dict_pd = [("T1", "mouse model", "Obj"), ("T2", "spark", "Sys")]
-    raw1 = spark.createDataFrame(
-        dict_pd, ["ent_id", "term", "label"]
-    ).withColumn("canonical_id", F.col("ent_id"))
-    sents = spark.createDataFrame(
-        [("c0", 0, 0, "the mice models run on spark today")],
-        ["conv_id", "turn_idx", "sent_idx", "sent_text"],
-    )
-
-    tagging._PREP_MEMO.clear()
-    tagging._ANCHOR_MEMO.clear()
-    d1 = tagging.prepare_dictionary(raw1)
-    assert tagging.prepare_dictionary(raw1) is d1  # prep memo: same object in -> same plan out
-
-    ov = {"mice": "mouse"}
-    r1 = {tuple(r) for r in tagging.tag_mentions(sents, d1, lemma_overrides=ov).collect()}
-    assert len(tagging._ANCHOR_MEMO) == 1
-    (key1,) = tagging._ANCHOR_MEMO
-    r2 = {tuple(r) for r in tagging.tag_mentions(sents, d1, lemma_overrides=ov).collect()}
-    assert r1 == r2 and ("mouse model" in {t[5] for t in r1})
-    assert len(tagging._ANCHOR_MEMO) == 1  # second call was a hit, not a new entry
-
-    # different overrides -> different key (no false sharing)
-    tagging.tag_mentions(sents, d1, lemma_overrides={}).collect()
-    assert len(tagging._ANCHOR_MEMO) == 2
-
-    # an equivalent dictionary built as a NEW DataFrame object must MISS:
-    # re-read/changed sources can never be served a stale dim
-    raw2 = spark.createDataFrame(
-        dict_pd, ["ent_id", "term", "label"]
-    ).withColumn("canonical_id", F.col("ent_id"))
-    d2 = tagging.prepare_dictionary(raw2)
-    assert d2 is not d1
-    tagging.tag_mentions(sents, d2, lemma_overrides=ov).collect()
-    assert len(tagging._ANCHOR_MEMO) == 3
-
-
 def test_precompute_offsets_path_is_identical(spark, transcripts_df, dictionary_df):
     """The two stage-2 offset formulations (per-candidate O(pos) fold vs
     per-sentence offsets array + O(1) element_at — BENCH/TAGGING_STRESS.md)
@@ -795,15 +799,14 @@ def test_auto_bigram_anchor(spark, transcripts_df, dictionary_df):
 
     sents = sentencize(normalize_turns(transcripts_df))
 
-    # unskewed: auto must resolve to unigram (pair_mode False in the memo)
+    # unskewed: auto must resolve to unigram (pair_mode False)
     d_small = prepare_dictionary(dictionary_df)
     auto_small = {tuple(r) for r in tag_mentions(sents, d_small).collect()}
     uni_small = {
         tuple(r) for r in tag_mentions(sents, d_small, bigram_anchor=False).collect()
     }
     assert auto_small == uni_small and len(auto_small) > 100
-    key_auto = (id(d_small), (), 50_000, None, 64)
-    assert tagging._ANCHOR_MEMO[key_auto][3] is False
+    assert tagging._anchor_dim(d_small, {}, 50_000, None, 64)[2] is False
 
     # skewed: one first token shared by > threshold multi-token terms
     skew_rows = [(f"S{i:04d}", f"alpha variant{i}", "Sys") for i in range(80)]
@@ -826,10 +829,11 @@ def test_auto_bigram_anchor(spark, transcripts_df, dictionary_df):
     surfaces = {r[-1] for r in auto}
     assert {"alpha variant7", "alpha variant63", "alpha", "beta stream"} <= surfaces
     # auto resolved to pair mode for the oversized group
-    assert tagging._ANCHOR_MEMO[(id(d_skew), (), 50_000, None, 64)][3] is True
+    assert tagging._anchor_dim(d_skew, {}, 50_000, None, 64)[2] is True
     # threshold override: raise it above the group size -> unigram again
-    tag_mentions(corpus, d_skew, bigram_anchor_threshold=500).collect()
-    assert tagging._ANCHOR_MEMO[(id(d_skew), (), 50_000, None, 500)][3] is False
+    assert tagging._anchor_dim(d_skew, {}, 50_000, None, 500)[2] is False
+    raised = tag_mentions(corpus, d_skew, bigram_anchor_threshold=500).collect()
+    assert {tuple(r) for r in raised} == auto
 
 
 def test_recorded_hf_ner_output_first_strategy_links(spark):
